@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -14,8 +15,49 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Settings that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schema per table path, with the fingerprint it was inferred
+    * under. `spark.read.parquet` infers by reading footers in a one-task
+    * Spark job on every call, and a read tool loads up to five tables, so
+    * inferring once per table version removes that many jobs per call.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** The table's schema: inferred on the first load and again whenever the
+    * fingerprint moves — the inference settings, or any file's path, length
+    * or modification time (so a table rewritten at the same path is
+    * re-inferred). The fingerprint is one file listing, no data read.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing table keeps spark.read's own error
+    if (!fs.exists(p)) return spark.read.parquet(path).schema
+    val files = fs.listFiles(p, true)
+    val listing = Vector.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val fingerprint = inferenceConfs.map(k => spark.conf.getOption(k)) ++ listing.result().sorted
+    val hit = schemas.get(path)
+    if (hit != null && hit._1 == fingerprint) hit._2
+    else {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(path, (fingerprint, schema))
+      schema
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -29,7 +71,8 @@ object Tables {
     * read nanos as long via the legacy flag, floor to micros) and plain
     * micros TIMESTAMP_NTZ. Adapt on the observed schema and surface a
     * uniform TimestampType column either way (session TZ is pinned UTC, so
-    * the NTZ cast preserves wall time).
+    * the NTZ cast preserves wall time). The flag is set before `load`, so
+    * the schema is inferred (and remembered) under it.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

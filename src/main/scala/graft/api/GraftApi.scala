@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crm.CrmOps
 
@@ -29,33 +30,41 @@ object GraftApi {
   /** Destination for the read→index side-effect leg — the reference's
     * defining dataflow (`handlers/base_handler.py:78-90`): every read tool
     * embeds its result rows and appends them to the vector index, so the
-    * search tool can later retrieve anything a read tool has returned.
+    * search tool can later retrieve anything a read tool has returned. The
+    * leg indexes exactly the page the caller received (see [[readPage]]).
     */
   case class IndexSink(path: String, ingestDate: java.sql.Date,
       embedder: graft.vector.Embedder = new graft.vector.HashingEmbedder())
 
-  private def indexLeg(df: org.apache.spark.sql.DataFrame, textCol: String,
-      dataType: String, sink: Option[IndexSink]): Unit =
+  /** Runs a read tool's query once: collects its page and, with a sink,
+    * indexes exactly those rows. The index leg writes the collected rows
+    * back from the driver as a local dataset, so the CRM tables are scanned
+    * by the collect alone and the index holds the page the caller got, not
+    * a second run of the query. Every tool's case-class fields follow its
+    * DataFrame's column order, so `data_json` is the query row's JSON.
+    */
+  private def readPage[T: Encoder: ClassTag](s: SparkSession, df: DataFrame,
+      textCol: String, dataType: String, sink: Option[IndexSink]): Seq[T] = {
+    val rows = df.as[T].collect().toSeq
     sink.foreach(k => graft.vector.IndexPipeline.indexRecords(
-      df, textCol, dataType, k.path, k.ingestDate, k.embedder))
+      s.createDataset(s.sparkContext.parallelize(rows)).toDF(), textCol, dataType,
+      k.path, k.ingestDate, k.embedder))
+    rows
+  }
 
   private def cursor(lastmod: String, id: String): String = s"$lastmod|$id"
 
   def getActiveCompanies(s: SparkSession, d: String, limit: Int = 10,
       sink: Option[IndexSink] = None): Page[Company] = {
     import s.implicits._
-    val df = CrmOps.activeCompanies(s, d, limit)
-    indexLeg(df, "name", "company", sink)
-    val rows = df.as[Company].collect().toSeq
+    val rows = readPage[Company](s, CrmOps.activeCompanies(s, d, limit), "name", "company", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.hs_lastmodifieddate, c.id)))
   }
 
   def getActiveContacts(s: SparkSession, d: String, limit: Int = 10,
       sink: Option[IndexSink] = None): Page[Contact] = {
     import s.implicits._
-    val df = CrmOps.activeContacts(s, d, limit)
-    indexLeg(df, "email", "contact", sink)
-    val rows = df.as[Contact].collect().toSeq
+    val rows = readPage[Contact](s, CrmOps.activeContacts(s, d, limit), "email", "contact", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => cursor(c.lastmodifieddate, c.id)))
   }
 
@@ -91,8 +100,7 @@ object GraftApi {
     val page = resumed
       .orderBy(col("hs_lastmodifieddate").desc, col("id").cast("long"))
       .limit(limit)
-    indexLeg(page, "subject", "ticket", sink)
-    val rows = page.as[Ticket].collect().toSeq
+    val rows = readPage[Ticket](s, page, "subject", "ticket", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(t => cursor(t.hs_lastmodifieddate, t.id)))
@@ -115,8 +123,7 @@ object GraftApi {
       (ts, id)
     }
     val page = CrmOps.emailPage(s, d, limit, cur).drop("created_at_ts", "email_id")
-    indexLeg(page, "body", "email", sink)
-    val rows = page.as[Email].collect().toSeq
+    val rows = readPage[Email](s, page, "body", "email", sink)
     Page(rows, rows.size.toLong,
       if (rows.size < limit) None
       else rows.lastOption.map(e => cursor(e.created_at, e.id)))
@@ -172,8 +179,7 @@ object GraftApi {
       case Some(tc) => tc.recentConversations(d, limit, refresh = refreshCache)._1
       case None => CrmOps.recentConversations(s, d, limit)
     }
-    indexLeg(df, "first_msg_truncated", "conversation", sink)
-    val rows = df.as[Conversation].collect().toSeq
+    val rows = readPage[Conversation](s, df, "first_msg_truncated", "conversation", sink)
     Page(rows, rows.size.toLong, rows.lastOption.map(c => c.thread_id.toString))
   }
 
@@ -184,9 +190,8 @@ object GraftApi {
   def getCompanyActivity(s: SparkSession, d: String, fanoutCap: Int = 500,
       sink: Option[IndexSink] = None): Page[ActivityRow] = {
     import s.implicits._
-    val df = CrmOps.companyActivity(s, d, fanoutCap)
-    indexLeg(df, "content", "company_activity", sink)
-    val rows = df.as[ActivityRow].collect().toSeq
+    val rows = readPage[ActivityRow](s, CrmOps.companyActivity(s, d, fanoutCap), "content",
+      "company_activity", sink)
     Page(rows, rows.size.toLong, None)
   }
 
@@ -197,9 +202,8 @@ object GraftApi {
   def getTicketThreads(s: SparkSession, d: String, nTickets: Int = 20,
       sink: Option[IndexSink] = None): Page[ThreadMessage] = {
     import s.implicits._
-    val df = CrmOps.ticketConversationThreads(s, d, nTickets)
-    indexLeg(df, "text", "ticket_thread", sink)
-    val rows = df.as[ThreadMessage].collect().toSeq
+    val rows = readPage[ThreadMessage](s, CrmOps.ticketConversationThreads(s, d, nTickets),
+      "text", "ticket_thread", sink)
     Page(rows, rows.size.toLong, None)
   }
 

@@ -15,15 +15,27 @@ object IndexPipeline {
     * `faiss_manager.py:221-252`). `data_json` keeps the full record
     * (dual-fidelity: the index stores full text even when the tool response
     * truncates, `handlers/conversation_handler.py:63-67`).
+    *
+    * A record whose `textCol` is null embeds its `data_json` instead — the
+    * serialized record, which is what the reference embeds (`utils.py:22`)
+    * — so no row is ever written with a null embedding.
+    *
+    * `vec_id` is a 64-bit hash of (`data_type`, `data_json`): the record's
+    * content identity, computed per row with no extra job. Ids therefore
+    * stay distinct across any number of appends to one index (up to hash
+    * collisions), and a record indexed again keeps its id, so a takedown
+    * removes every copy.
     */
   def indexRecords(records: DataFrame, textCol: String, dataType: String,
       indexPath: String, ingestDate: java.sql.Date,
       embedder: Embedder = new HashingEmbedder()): Unit = {
-    val rows = records.select(
-      monotonically_increasing_id().as("vec_id"),
-      embedder.embedCol(col(textCol)).as("embedding"),
+    val wrapped = records.select(col(textCol).as("text"),
+      to_json(struct(records.columns.map(col): _*)).as("data_json"))
+    val rows = wrapped.select(
+      xxhash64(lit(dataType), col("data_json")).as("vec_id"),
+      embedder.embedCol(coalesce(col("text"), col("data_json"))).as("embedding"),
       lit(dataType).as("data_type"),
-      to_json(struct(records.columns.map(col): _*)).as("data_json"),
+      col("data_json"),
       lit(ingestDate).as("ingest_date"))
     VectorIndex.append(rows, indexPath)
   }
@@ -113,8 +125,8 @@ object IndexPipeline {
         VectorIndex.dropTombstoned(spark, indexPath, spark.read.parquet(indexPath))
     }
     val q = qEmbedded
-    val corpus = idx.select(col("vec_id"), col("embedding"), col("data_type"),
-      col("data_json"))
+    val corpus = idx.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"), col("data_type"), col("data_json"))
     q.crossJoin(corpus)
       .withColumn("d2", l2Sq(col("q_emb"), col("embedding")))
       .groupBy(col("query_id"))
@@ -122,10 +134,11 @@ object IndexPipeline {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("vec_id"), (-col("col.value")).as("d2"))
-      // dropDuplicates: a vec_id re-ingested on several ingest_dates must not
-      // fan the rank join out into duplicate (query_id, rank) rows — the
-      // single-query path carries its payload through the top-k without a
-      // join, so this keeps batch ≡ N-singles.
+      // dropDuplicates: a record re-ingested on several ingest_dates keeps
+      // its vec_id (and its payload) and must not fan the rank join out into
+      // duplicate (query_id, rank) rows — the single-query path carries its
+      // payload through the top-k without a join, so this keeps batch ≡
+      // N-singles.
       .join(corpus.select(col("vec_id"), col("data_type"), col("data_json"))
         .dropDuplicates("vec_id"), "vec_id")
       .select(col("query_id"), col("rank"),

@@ -169,11 +169,14 @@ object VectorIndex {
     * `{rank, similarity_score, data_type, data_json}` — similarity is the
     * verbatim `1 - d/2` on squared L2. Per-partition top-k + global merge is
     * Spark's TakeOrderedAndProject, the exact analog of the reference's
-    * per-index search + merge loop.
+    * per-index search + merge loop. Rows with a null embedding (written by
+    * older ingests for records whose text column was null) have no
+    * distance and are skipped.
     */
   def search(index: DataFrame, query: Seq[Float], k: Int = 10): DataFrame = {
     val q = lit(query.toArray)
     index
+      .filter(col("embedding").isNotNull)
       .withColumn("d2", l2Sq(col("embedding"), q))
       .orderBy(col("d2"), col("vec_id"))
       .limit(k)

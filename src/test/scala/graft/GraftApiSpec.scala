@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import graft.api.GraftApi
 
 class GraftApiSpec extends SparkSpec {
@@ -385,9 +387,9 @@ class GraftApiSpec extends SparkSpec {
   test("batch search: a vec_id re-ingested on two retained days yields one hit, not two") {
     val dir = java.nio.file.Files.createTempDirectory("graft-api-dup").toString + "/idx"
     val docs = Tables.documents(spark, sf).limit(30)
-    // monotonically_increasing_id over the same 30 rows reproduces the same
-    // vec_ids, so both retained days carry every id — the rank join's payload
-    // side must dedup or every hit doubles.
+    // vec_id is the record's content hash, so the same 30 rows carry the
+    // same vec_ids on both retained days — the rank join's payload side must
+    // dedup or every hit doubles.
     graft.vector.IndexPipeline.indexRecords(docs, "text", "document", dir,
       java.sql.Date.valueOf("2024-03-01"))
     graft.vector.IndexPipeline.indexRecords(docs, "text", "document", dir,
@@ -431,5 +433,174 @@ class GraftApiSpec extends SparkSpec {
     val oldHits = GraftApi.searchData(spark, dir, probe, 10,
       asOf = java.sql.Date.valueOf("2024-01-02"))
     assert(oldHits.results.nonEmpty && oldHits.results.forall(_.data_type == "old"))
+  }
+
+  // ---- the read→index leg: one CRM query per tool call ----
+
+  /** What `body` set off: the Spark jobs it launched and the Dataset
+    * actions it ran. Listener delivery is async but ordered on one queue,
+    * so a marker job run before `body` flushes events of earlier work, and
+    * one run after it arrives only once every event `body` caused has.
+    */
+  private def observe[A](body: => A): (A, Int, Seq[QueryExecution]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val markers = new java.util.concurrent.Semaphore(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markers.release()
+        else { jobs.incrementAndGet(); () }
+    }
+    val actionListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { actions.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def flush(): Unit = {
+      sc.setJobGroup(marker, "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markers.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(actionListener)
+    try {
+      flush()
+      jobs.set(0)
+      actions.clear()
+      val out = body
+      flush()
+      (out, jobs.get(), actions.toArray(Array.empty[QueryExecution]).toSeq)
+    } finally {
+      spark.listenerManager.unregister(actionListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  /** Parquet files under the fixture directory that an action's plan reads. */
+  private def crmScans(qe: QueryExecution): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val root = new java.io.File(sf).getCanonicalPath
+    qe.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
+      .flatten.filter(_.startsWith(root))
+  }
+
+  private def isWrite(qe: QueryExecution): Boolean =
+    qe.analyzed.collectFirst {
+      case c: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand => c
+    }.isDefined
+
+  test("each read tool runs its CRM query once; the index write reads only the page") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-once").toString + "/idx"
+    val sink = Some(GraftApi.IndexSink(dir, java.sql.Date.valueOf("2024-03-01")))
+    // (tool, data_type, page rows, the tool's own query — the page before typing)
+    val calls: Seq[(String, String, () => Seq[Any], () => DataFrame)] = Seq(
+      ("companies", "company", () => GraftApi.getActiveCompanies(spark, sf, 10, sink).results,
+        () => graft.crm.CrmOps.activeCompanies(spark, sf, 10)),
+      ("contacts", "contact", () => GraftApi.getActiveContacts(spark, sf, 10, sink).results,
+        () => graft.crm.CrmOps.activeContacts(spark, sf, 10)),
+      ("tickets", "ticket", () => GraftApi.getTickets(spark, sf, limit = 20, sink = sink).results,
+        () => graft.crm.CrmOps.ticketsDefault(spark, sf, 20)),
+      ("emails", "email", () => GraftApi.getRecentEmails(spark, sf, 20, sink = sink).results,
+        () => graft.crm.CrmOps.recentEmails(spark, sf, 20)),
+      ("conversations", "conversation",
+        () => GraftApi.getRecentConversations(spark, sf, 10, sink = sink).results,
+        () => graft.crm.CrmOps.recentConversations(spark, sf, 10)),
+      ("activity", "company_activity",
+        () => GraftApi.getCompanyActivity(spark, sf, 5, sink).results,
+        () => graft.crm.CrmOps.companyActivity(spark, sf, 5)),
+      ("threads", "ticket_thread", () => GraftApi.getTicketThreads(spark, sf, 5, sink).results,
+        () => graft.crm.CrmOps.ticketConversationThreads(spark, sf, 5)))
+    calls.foreach { case (tool, dataType, call, query) =>
+      val (page, _, actions) = observe(call())
+      val reads = actions.filter(qe => crmScans(qe).nonEmpty)
+      assert(reads.size == 1, s"$tool: ${reads.size} actions scanned CRM tables, want 1")
+      assert(!isWrite(reads.head), s"$tool: the CRM scan must be the page collect")
+      val writes = actions.filter(isWrite)
+      assert(writes.size == 1, s"$tool: want one index write, saw ${writes.size}")
+      assert(!writes.head.executedPlan.toString.contains("FileScan parquet"),
+        s"$tool: the index write must not scan any table:\n${writes.head.executedPlan}")
+      // the index holds exactly the page, and each row's data_json is the
+      // tool query's own row serialized — field order included
+      val indexed = spark.read.parquet(dir).filter(col("data_type") === dataType)
+        .select("data_json").collect().map(_.getString(0)).toSeq.sorted
+      val q = query()
+      val expected = q.select(to_json(struct(q.columns.map(col): _*)))
+        .collect().map(_.getString(0)).toSeq.sorted
+      assert(page.nonEmpty && indexed.size == page.size, s"$tool: indexed ${indexed.size} of ${page.size}")
+      assert(indexed == expected, s"$tool: indexed rows differ from the page")
+    }
+  }
+
+  test("Tables.load infers a table's schema once; a rewritten table is inferred again") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val path = s"$dir/t.parquet"
+    spark.range(3).toDF("a").write.parquet(path)
+    val (first, firstJobs, _) = observe(Tables.load(spark, dir, "t"))
+    assert(first.columns.toSeq == Seq("a") && firstJobs >= 1, "the first load infers")
+    val (again, againJobs, _) = observe(Tables.load(spark, dir, "t"))
+    assert(again.columns.toSeq == Seq("a"))
+    assert(againJobs == 0, s"a second load of an unchanged table ran $againJobs jobs")
+    spark.range(3).select(col("id").as("b"), lit("x").as("c"))
+      .write.mode("overwrite").parquet(path)
+    val (rewritten, rewrittenJobs, _) = observe(Tables.load(spark, dir, "t"))
+    assert(rewritten.columns.toSeq == Seq("b", "c") && rewrittenJobs >= 1,
+      "a table rewritten at the same path must be inferred again")
+    assert(rewritten.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("searchData after conversations with a null first message: no throw, exact hit first") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-null").toString + "/idx"
+    val sink = Some(GraftApi.IndexSink(dir, java.sql.Date.valueOf("2024-03-01")))
+    val convs = GraftApi.getRecentConversations(spark, sf, 50, sink = sink).results
+    assert(convs.exists(_.first_msg_truncated == null),
+      "the fixture must hold a thread without a first message for this test to bite")
+    val c = convs.find(_.first_msg_truncated != null).get
+    val hits = GraftApi.searchData(spark, dir, c.first_msg_truncated, 10).results
+    assert(hits.nonEmpty && hits.head.similarity_score >= 0.9999)
+    assert(hits.head.data_json.contains(s""""first_msg_truncated":"${c.first_msg_truncated}""""))
+    val stored = spark.read.parquet(dir)
+    assert(stored.filter(col("embedding").isNull).count() == 0, "no null embedding is written")
+    // an index written before the fix may hold null embeddings: search skips them
+    val legacy = java.nio.file.Files.createTempDirectory("graft-api-legacy").toString + "/idx"
+    graft.vector.VectorIndex.append(stored.select(col("vec_id"),
+      when(get_json_object(col("data_json"), "$.first_msg_truncated").isNotNull,
+        col("embedding")).as("embedding"),
+      col("data_type"), col("data_json"), col("ingest_date")), legacy)
+    assert(spark.read.parquet(legacy).filter(col("embedding").isNull).count() > 0)
+    val legacyHits = GraftApi.searchData(spark, legacy, c.first_msg_truncated, 10).results
+    assert(legacyHits.head.data_json == hits.head.data_json)
+    assert(legacyHits.forall(_.data_json.contains("first_msg_truncated")))
+  }
+
+  test("vec_id stays unique across appends: batch search returns the single-search payloads") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-ids").toString + "/idx"
+    val sink = Some(GraftApi.IndexSink(dir, java.sql.Date.valueOf("2024-03-01")))
+    val companies = GraftApi.getActiveCompanies(spark, sf, 10, sink).results
+    val tickets = GraftApi.getTickets(spark, sf, limit = 10, sink = sink).results
+    val texts = (companies.take(3).map(_.name) ++ tickets.take(3).map(_.subject))
+      .zipWithIndex.map { case (t, i) => i.toLong -> t }
+    val batch = GraftApi.searchDataBatch(spark, dir, texts, 5).results.groupBy(_.query_id)
+    texts.foreach { case (qid, text) =>
+      val single = GraftApi.searchData(spark, dir, text, 5).results
+      assert(batch(qid).sortBy(_.rank).map(h => (h.data_type, h.data_json)) ==
+        single.map(h => (h.data_type, h.data_json)), s"query '$text'")
+    }
+    val stored = spark.read.parquet(dir)
+    assert(stored.select("vec_id").distinct().count() == stored.count(),
+      "two appends must not share a vec_id")
+    // a takedown of one record leaves the other append's rows alone
+    val victim = stored.filter(col("data_type") === "company").select("vec_id").limit(1)
+    graft.vector.VectorIndex.delete(spark, dir, victim)
+    val left = graft.vector.VectorIndex.loadRecent(spark, dir, java.sql.Date.valueOf("2024-03-01"))
+    assert(left.count() == stored.count() - 1)
   }
 }
